@@ -78,7 +78,13 @@ object CtasPipeline {
     // that scan+distinct once more than needed — pin the INPUT frame so
     // validation materializes the cache the projection then reads.
     val p0 = in.parameters.persist(StorageLevel.MEMORY_AND_DISK)
-    SchemaCheck.validate(in.copy(subjects = subjects, parameters = p0), cfg)
+    // a rejected input must not leave the two pins behind
+    try SchemaCheck.validate(in.copy(subjects = subjects, parameters = p0), cfg)
+    catch {
+      case e: Throwable =>
+        Seq(subjects, p0).foreach(_.unpersist(false))
+        throw e
+    }
 
     // Defaults fill (R/ctas.R:54-61). Optional columns may be missing the
     // right type when all-null; cast through double/boolean.

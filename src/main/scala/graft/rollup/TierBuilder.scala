@@ -1,8 +1,19 @@
 package graft.rollup
 
 import graft.store.SnapshotStore
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** End-to-end tier build with per-partition lineage + metrics and
   * snapshot-level resume (north_rule).
@@ -10,12 +21,19 @@ import org.apache.spark.sql.functions._
   * Scale shape (VERDICT r01 "What's wrong" #4 — the old build collected
   * the day list and ran one full-input scan per day): ALL missing day
   * partitions are now built in a single job that writes
-  * `partitionBy("day")`, and per-partition manifest entries are committed
-  * from the written output. When the input pages table is itself
+  * `partitionBy("day")`. When the input pages table is itself
   * day-partitioned (see [[writePagesByDay]]), the `day IN (missing…)`
-  * filter becomes a metadata-only PartitionFilter, so a resumed build
-  * scans ONLY the missing days — at 10^12 rows the resume path reads a
-  * fraction of the table instead of scanning it once per day.
+  * filter becomes a PartitionFilter, so a resumed build scans ONLY the
+  * missing days — at 10^12 rows the resume path reads a fraction of the
+  * table instead of scanning it once per day.
+  *
+  * The plan around that write launches no job of its own. The day list
+  * of a bare day-partitioned source comes from the partition listing its
+  * file index already made (any other source still needs one `distinct`
+  * scan of its day column, see [[sourceDays]]). The per-partition row
+  * counts recorded in the manifest are summed from the parquet footers
+  * of the files just written, read in-process instead of by a read-back
+  * `groupBy().count()`.
   *
   * `daysPerJob` bounds how many day partitions one job (and one manifest
   * commit) covers, so long builds checkpoint incrementally — default 30;
@@ -26,9 +44,12 @@ import org.apache.spark.sql.functions._
   * under `<storeRoot>/tier_<name>`, re-aggregates only committed hourly
   * days, commits per coarse partition (with the contributing source days
   * recorded as lineage), and on resume rebuilds only coarse partitions
-  * that are missing or whose committed source-day set has since grown —
-  * a crash between the hourly and weekly builds no longer recomputes
-  * committed coarse partitions.
+  * that are missing or that a committed hourly day feeds but is not in
+  * their lineage yet — a crash between the hourly and weekly builds no
+  * longer recomputes committed coarse partitions, and hourly retention
+  * does not make them stale. The hourly data is read with the Spark
+  * schema its files' footers record, so no schema-inference job runs, and
+  * the coarse row counts come from footers too.
   */
 object TierBuilder {
 
@@ -85,14 +106,14 @@ object TierBuilder {
       daysPerJob: Int = 30): BuildReport = {
 
     val store = new SnapshotStore(storeRoot)
-    val committed = if (resume) store.committedPartitions() else Set.empty[String]
+    // live partitions and retention tombstones are both done: a source
+    // that still holds an expired day does not rebuild it
+    val done = if (!resume) Set.empty[String]
+      else store.latestSnapshot().map(s => s.partitions.map(_.name).toSet ++ s.expired)
+        .getOrElse(Set.empty[String])
 
     val wd = withDay(pages)
-    // one pass over the day column (metadata-only on a partitioned source;
-    // cast because partition-column type inference may make it a DATE)
-    val days = wd.select(col("day").cast("string").as("day")).distinct().orderBy("day")
-      .collect().map(_.getString(0)).toSeq
-    val (doneDays, missingDays) = days.partition(d => committed.contains(s"day=$d"))
+    val (doneDays, missingDays) = sourceDays(pages).partition(d => done.contains(s"day=$d"))
     val skipped = doneDays.map(d => s"day=$d")
 
     val batches =
@@ -115,14 +136,9 @@ object TierBuilder {
       tier.write.partitionBy("day")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(dataDir)
-      // per-partition row counts from the written output: reads only the
-      // day partition column (zero data columns) of the touched days
-      val counts = spark.read.parquet(dataDir)
-        .filter(col("day").isin(batch: _*))
-        .groupBy(col("day").cast("string").as("day")).agg(count(lit(1)).as("rows"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val counts = footerRows(spark, dataDir, batch.map(d => s"day=$d"))
       val entries = batch.map { d =>
-        val rows = counts.getOrElse(d, 0L)
+        val rows = counts(s"day=$d")
         totalPoints += rows
         built += s"day=$d"
         store.PartitionEntry(
@@ -135,6 +151,63 @@ object TierBuilder {
       jobs += 1
     }
     BuildReport(built.toSeq, skipped, totalPoints)
+  }
+
+  /** The days of a pages table, sorted. A bare day-partitioned file
+    * relation (`spark.read.parquet` over a [[writePagesByDay]] table)
+    * listed its partitions when it was created, so its days come from that
+    * listing and no job runs. Any other input has no physical `day`
+    * column to list and is scanned once with `distinct`.
+    */
+  def sourceDays(pages: DataFrame): Seq[String] = pages.queryExecution.analyzed match {
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+        if fs.partitionSchema.fieldNames.contains("day") =>
+      val i = fs.partitionSchema.fieldIndex("day")
+      // same rendering as the scan's cast (partition type inference may
+      // have made the column a DATE)
+      val asString = Cast(BoundReference(i, fs.partitionSchema(i).dataType, nullable = true),
+        StringType, Some(pages.sparkSession.sessionState.conf.sessionLocalTimeZone))
+      fs.location.listFiles(Nil, Nil).filter(_.files.nonEmpty)
+        .flatMap(p => Option(asString.eval(p.values))).map(_.toString).distinct.sorted
+    case _ =>
+      withDay(pages).select(col("day").cast("string").as("day")).distinct().orderBy("day")
+        .collect().map(_.getString(0)).toSeq
+  }
+
+  /** Data files of one partition directory of a parquet table. */
+  private def partitionFiles(conf: Configuration, dataDir: String, partition: String): Seq[Path] = {
+    val dir = new Path(dataDir, partition)
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+  }
+
+  private def footer(conf: Configuration, file: Path): ParquetMetadata =
+    Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(file, conf)))(_.getFooter)
+
+  /** Rows per partition directory, summed from the parquet footers of its
+    * files, read in-process (no job); a partition with no files has 0 rows.
+    */
+  private def footerRows(
+      spark: SparkSession, dataDir: String, partitions: Seq[String]): Map[String, Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    partitions.map { p =>
+      p -> partitionFiles(conf, dataDir, p)
+        .map(f => footer(conf, f).getBlocks.asScala.map(_.getRowCount).sum).sum
+    }.toMap
+  }
+
+  /** The Spark schema the first file found under `partitions` was written
+    * with, from its footer (no inference job); None if there is no file.
+    */
+  private def writtenSchema(
+      spark: SparkSession, dataDir: String, partitions: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    partitions.iterator.flatMap(p => partitionFiles(conf, dataDir, p)).nextOption()
+      .flatMap(f => Option(footer(conf, f).getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)))
+      .map(json => DataType.fromJson(json).asInstanceOf[StructType])
   }
 
   /** Read the committed hourly tier back as one DataFrame (only committed
@@ -170,9 +243,13 @@ object TierBuilder {
 
   /** Build (or incrementally extend) a coarse tier from the committed
     * hourly store. Only missing-or-stale coarse partitions are rebuilt:
-    * a partition is stale when hourly days that feed it were committed
-    * after it was (its recorded source-day lineage is a strict subset of
-    * the hourly manifest's). Each batch writes with dynamic partition
+    * a partition is stale when a committed hourly day feeds it that its
+    * recorded source-day lineage lacks. Lineage days that hourly retention
+    * has since expired do not make it stale, so it keeps their data. A
+    * stale partition that also lost lineage days to retention is refused
+    * with an IllegalStateException, because its rebuild could read only
+    * the days still held; `resume = false` rebuilds every partition from
+    * the hourly days the store holds now. Each batch writes with dynamic partition
     * overwrite and commits its manifest entries, so a kill mid-build
     * resumes from the last committed coarse partition with a
     * day-pruned scan of the hourly data.
@@ -198,19 +275,39 @@ object TierBuilder {
     val srcDays: Map[String, Seq[String]] = hourlyDays
       .groupBy(d => coarsePartOf(tier, d)._1)
       .map { case (p, ds) => p -> ds.sorted }
-    val committed: Map[String, String] =
-      if (resume)
-        store.latestSnapshot().map(_.partitions.map(p =>
-          p.name -> p.metrics.getOrElse("source_days", "")).toMap)
-          .getOrElse(Map.empty)
-      else Map.empty
+    // committed source-day lineage per coarse partition
+    val lineage: Map[String, Set[String]] =
+      if (!resume) Map.empty
+      else store.latestSnapshot().map(_.partitions.map(p =>
+        p.name -> p.metrics.getOrElse("source_days", "").split(",").filter(_.nonEmpty).toSet)
+        .toMap).getOrElse(Map.empty)
+    // stale = a committed hourly day feeds the partition but is missing
+    // from its lineage; lineage days that retention has since expired from
+    // the hourly tier do not make it stale
     val (doneParts, missingParts) = srcDays.keys.toSeq.sorted.partition(p =>
-      committed.get(p).contains(srcDays(p).mkString(",")))
+      lineage.get(p).exists(l => srcDays(p).forall(l.contains)))
+    // a rebuild reads only the hourly days still held, so a stale partition
+    // whose lineage lost days to retention would silently drop their data
+    missingParts.foreach { p =>
+      val gone = lineage.getOrElse(p, Set.empty) -- srcDays(p)
+      if (gone.nonEmpty)
+        throw new IllegalStateException(
+          s"$tier partition $p must take new hourly days, but its source days " +
+            s"${gone.toSeq.sorted.mkString(",")} are no longer in the hourly tier, so a " +
+            s"rebuild would drop their data; keep the hourly retention window at least " +
+            s"one $tier bucket long, or rebuild the tier from the remaining hourly days " +
+            "with resume = false")
+    }
 
     val batches =
       if (partitionsPerJob <= 0) Seq(missingParts).filter(_.nonEmpty)
       else missingParts.grouped(partitionsPerJob).toSeq
 
+    val hourlyDir = s"$storeRoot/data"
+    // read with the hourly files' own schema: no inference job
+    lazy val hourlyData = writtenSchema(spark, hourlyDir, hourlyDays.map(d => s"day=$d"))
+      .fold(spark.read)(schema => spark.read.schema(schema.add("day", StringType)))
+      .parquet(hourlyDir)
     val dataDir = s"$coarseRoot/data"
     val built = collection.mutable.ArrayBuffer.empty[String]
     var totalPoints = 0L
@@ -220,10 +317,8 @@ object TierBuilder {
       if (jobs >= failAfter)
         throw new RuntimeException(s"injected failure before ${batch.head}")
       val days = batch.flatMap(srcDays)
-      // day-pruned scan of the hourly tier (metadata-only PartitionFilter)
-      val hourly = spark.read.parquet(s"$storeRoot/data")
-        .filter(col("day").isin(days: _*))
-        .drop("day")
+      // day-pruned scan of the hourly tier (PartitionFilter)
+      val hourly = hourlyData.filter(col("day").isin(days: _*)).drop("day")
       val coarse = Tiers.rollup(hourly, "hourly", tier)
         .withColumn(partCol,
           if (tier == "daily")
@@ -233,13 +328,9 @@ object TierBuilder {
       coarse.write.partitionBy(partCol)
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(dataDir)
-      val batchVals = batch.map(_.split("=", 2)(1))
-      val counts = spark.read.parquet(dataDir)
-        .filter(col(partCol).isin(batchVals: _*))
-        .groupBy(col(partCol).cast("string").as("p")).agg(count(lit(1)).as("rows"))
-        .collect().map(r => s"$partCol=${r.getString(0)}" -> r.getLong(1)).toMap
+      val counts = footerRows(spark, dataDir, batch)
       val entries = batch.map { p =>
-        val rows = counts.getOrElse(p, 0L)
+        val rows = counts(p)
         totalPoints += rows
         built += p
         store.PartitionEntry(

@@ -98,6 +98,14 @@ class CtasPipelineSpec extends GraftSuite {
     assert(e.getMessage.contains("replicate subject IDs"))
   }
 
+  test("failed validation releases the inputs it persisted") {
+    val dupSubjects = study.subjects.unionByName(study.subjects.limit(1))
+    val input = study.input.copy(subjects = dupSubjects)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[IllegalArgumentException](CtasPipeline.processAStudy(input, cfg()))
+    assert(spark.sparkContext.getPersistentRDDs.size <= before)
+  }
+
   test("illegal feature name => validation error") {
     val e = intercept[IllegalArgumentException] {
       CtasPipeline.processAStudy(study.input, cfg(feats = Seq("bogus_feature")))

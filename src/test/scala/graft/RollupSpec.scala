@@ -2,8 +2,15 @@ package graft
 
 import graft.rollup._
 import graft.store.SnapshotStore
+import java.nio.file.{Files, Paths}
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class GorillaSpec extends AnyFunSuite {
   test("encode/decode round-trips arbitrary point streams") {
@@ -433,5 +440,175 @@ class SnapshotStoreSpec extends GraftSuite {
     val afterNewDay = TierBuilder.buildCoarse(spark, root, "daily")
     assert(afterNewDay.builtPartitions === Seq(s"day=$fakeDay"),
       s"only the new day's partition should rebuild: $afterNewDay")
+  }
+
+  // ------------------------------------------------ resume from metadata
+
+  /** `body`'s result with the Spark jobs it started and the SQL executions
+    * it ran, as delivered by the listener bus.
+    */
+  private def recording[T](body: => T): (T, Seq[SparkListenerJobStart], Seq[QueryExecution]) = {
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    }
+    val execListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = execs.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = execs.add(qe)
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(execListener)
+    try {
+      val result = body
+      ListenerBus.drain(sc)
+      (result, jobs.asScala.toSeq, execs.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(execListener)
+    }
+  }
+
+  private object Scans extends AdaptiveSparkPlanHelper {
+    def of(qe: QueryExecution): Seq[FileSourceScanExec] =
+      collect(qe.executedPlan) { case s: FileSourceScanExec => s }
+  }
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  /** a day-partitioned pages table holding `days`, appended to `dir` */
+  private def addDays(pages: org.apache.spark.sql.DataFrame, days: Seq[String], dir: String): Unit =
+    TierBuilder.withDay(pages).filter(col("day").isin(days: _*))
+      .write.partitionBy("day").mode("append").parquet(dir)
+
+  private lazy val crawl = CrawlSynth.pages(spark, 3000, nHosts = 20, numPartitions = 4)
+  private lazy val crawlDays = TierBuilder.sourceDays(crawl)
+
+  test("a manifest without retention tombstones parses; commit clears a tombstone") {
+    val root = tmp("oldmanifest")
+    Files.createDirectories(Paths.get(root, "_snapshots"))
+    Files.write(Paths.get(root, "_snapshots", "manifest-0.json"),
+      ("""{"seq":0,"parent":-1,"ts":1,"partitions":[""" +
+        """{"name":"day=2025-01-06","rows":10,"lineage":"test","metrics":{"points":"10"}},""" +
+        """{"name":"day=2025-01-07","rows":20,"lineage":"test","metrics":{"points":"20"}}]}""")
+        .getBytes("UTF-8"))
+    val store = new SnapshotStore(root)
+    val old = store.latestSnapshot().get
+    assert(old.expired.isEmpty)
+    assert(old.partitions.map(_.name) === Seq("day=2025-01-06", "day=2025-01-07"))
+    assert(old.partitions.head.metrics("points") === "10")
+
+    store.expire(_ == "day=2025-01-06")
+    val expired = store.latestSnapshot().get
+    assert(expired.expired === Set("day=2025-01-06"))
+    assert(store.committedPartitions() === Set("day=2025-01-07"))
+    // carried forward by a commit of another name, cleared by its own
+    store.commit(Seq(store.PartitionEntry("day=2025-01-08", 1, Map.empty, "test")))
+    assert(store.latestSnapshot().get.expired === Set("day=2025-01-06"))
+    store.commit(Seq(store.PartitionEntry("day=2025-01-06", 1, Map.empty, "test")))
+    assert(store.latestSnapshot().get.expired.isEmpty)
+    assert(store.committedPartitions() ===
+      Set("day=2025-01-06", "day=2025-01-07", "day=2025-01-08"))
+  }
+
+  test("day list: listed partitions of a day-partitioned source equal its distinct days") {
+    val dir = tmp("listeddays")
+    TierBuilder.writePagesByDay(crawl, dir)
+    val pages = spark.read.parquet(dir)
+    val (listed, jobs, _) = recording(TierBuilder.sourceDays(pages))
+    assert(jobs.size === 0, "the listed day list must run no job")
+    val distinct = pages.select(col("day").cast("string")).distinct()
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(listed === distinct)
+    // an input without a physical day column takes the distinct scan
+    assert(crawlDays === distinct)
+  }
+
+  test("footer row counts equal the committed tiers' row counts") {
+    val dir = tmp("footerpages")
+    TierBuilder.writePagesByDay(crawl, dir)
+    val root = tmp("footerbuild")
+    val hourly = TierBuilder.buildHourly(spark, spark.read.parquet(dir), root, resume = false)
+    assert(hourly.totalPoints === TierBuilder.readHourly(spark, root).count())
+    val manifest = new SnapshotStore(root).latestSnapshot().get.partitions
+      .map(p => p.name -> p.rows).toMap
+    val scanned = spark.read.parquet(s"$root/data").groupBy(col("day").cast("string")).count()
+      .collect().map(r => s"day=${r.getString(0)}" -> r.getLong(1)).toMap
+    assert(manifest === scanned)
+    val weekly = TierBuilder.buildCoarse(spark, root, "weekly", resume = false)
+    assert(weekly.totalPoints === TierBuilder.readCoarse(spark, root, "weekly").count())
+  }
+
+  test("retention: a resume after expire builds only the new day and keeps expired coarse data") {
+    val d = crawlDays
+    val src = tmp("retentionpages")
+    addDays(crawl, d.take(8), src)
+    val root = tmp("retentionbuild")
+    TierBuilder.buildHourly(spark, spark.read.parquet(src), root)
+    Seq("daily", "weekly").foreach(t => TierBuilder.buildCoarse(spark, root, t))
+    def week(b: Long) = TierBuilder.readCoarse(spark, root, "weekly")
+      .filter(col("bucket") === b).orderBy("series_id").collect().toSeq
+    val week0 = week(0)
+    assert(week0.nonEmpty)
+    val hourly = new SnapshotStore(root)
+
+    // 7-day window: day 0 expires, then day 8 lands
+    hourly.expire(_ < s"day=${d(1)}")
+    addDays(crawl, Seq(d(8)), src)
+    val resumed = TierBuilder.buildHourly(spark, spark.read.parquet(src), root)
+    assert(resumed.builtPartitions === Seq(s"day=${d(8)}"))
+    assert(resumed.skippedPartitions === d.take(8).map(x => s"day=$x"))
+    hourly.expire(_ < s"day=${d(2)}")
+    assert(hourly.committedPartitions() === d.slice(2, 9).map(x => s"day=$x").toSet)
+    assert(hourly.latestSnapshot().get.expired === d.take(2).map(x => s"day=$x").toSet)
+
+    // week 0 lost days 0 and 1 to retention but takes no new day: kept
+    val weekly = TierBuilder.buildCoarse(spark, root, "weekly")
+    assert(weekly.builtPartitions === Seq("week=1"))
+    assert(weekly.skippedPartitions === Seq("week=0"))
+    assert(week(0) === week0)
+    val week1Direct = Tiers.rollup(TierBuilder.readHourly(spark, root), "hourly", "weekly")
+      .filter(col("bucket") === 1).orderBy("series_id").collect().toSeq
+    assert(week(1) === week1Direct)
+    assert(TierBuilder.buildCoarse(spark, root, "daily").builtPartitions === Seq(s"day=${d(8)}"))
+
+    // a stale partition that lost source days to retention is refused
+    hourly.expire(_ == s"day=${d(7)}")
+    addDays(crawl, Seq(d(9)), src)
+    TierBuilder.buildHourly(spark, spark.read.parquet(src), root)
+    val refused = intercept[IllegalStateException](TierBuilder.buildCoarse(spark, root, "weekly"))
+    assert(refused.getMessage.contains(d(7)))
+
+    // resume = false re-adds an expired day the source holds
+    val rebuilt = TierBuilder.buildHourly(spark,
+      spark.read.parquet(src).filter(col("day").cast("string") === d(0)), root, resume = false)
+    assert(rebuilt.builtPartitions === Seq(s"day=${d(0)}"))
+    assert(hourly.committedPartitions().contains(s"day=${d(0)}"))
+    assert(!hourly.latestSnapshot().get.expired.contains(s"day=${d(0)}"))
+  }
+
+  test("resuming one new day runs one write over that day and no read-back") {
+    val d = crawlDays
+    val src = tmp("resumepages")
+    addDays(crawl, d.take(3), src)
+    val root = tmp("resumebuild")
+    TierBuilder.buildHourly(spark, spark.read.parquet(src), root)
+    addDays(crawl, Seq(d(3)), src)
+    val pages = spark.read.parquet(src)
+    val (report, jobs, execs) = recording(TierBuilder.buildHourly(spark, pages, root))
+    assert(report.builtPartitions === Seq(s"day=${d(3)}"))
+    // one SQL execution: the write; no day scan and no read-back count
+    assert(execs.size === 1, s"executions: ${execs.map(_.analyzed.nodeName)}")
+    val execIds = jobs.map(j => Option(j.properties).map(_.getProperty("spark.sql.execution.id")))
+    assert(jobs.nonEmpty && execIds.distinct.size == 1 && execIds.head.isDefined,
+      s"every job belongs to the write: $execIds")
+    // its scan reads only the new day's files
+    val newDayFiles = scala.util.Using.resource(Files.list(Paths.get(src, s"day=${d(3)}")))(
+      _.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")))
+    val scans = Scans.of(execs.head)
+    assert(scans.nonEmpty)
+    assert(scans.map(_.metrics("numFiles").value).sum === newDayFiles)
   }
 }
